@@ -3043,10 +3043,12 @@ def ext_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain (r6 scan audit: 4 document scans before, 1 after)
     grams = compute_once(grams)
     tot = grams.groupBy("source").agg(F.count("*").alias("n"))
+    # both pair sides are the same pinned frame: rename the gram column
+    # on one side so the equi-join names two distinct attributes
     a = grams.withColumnRenamed("source", "src_a")
-    b = grams.withColumnRenamed("source", "src_b")
+    b = grams.select(F.col("source").alias("src_b"), F.col("gh").alias("gh_b"))
     pairs = (
-        a.join(b, (a.gh == b.gh) & (F.col("src_a") < F.col("src_b")))
+        a.join(b, (F.col("gh") == F.col("gh_b")) & (F.col("src_a") < F.col("src_b")))
         .groupBy("src_a", "src_b")
         .agg(F.count("*").alias("shared_grams"))
     )

@@ -59,121 +59,6 @@ def register(name: str, oracle: Optional[str] = None):
 # ROTATION RULE: front-load (1) anything added or rewritten since the
 # last round, (2) the queries whose last hard check is oldest;
 # tests/test_registry.py locks the list against typos.
-# Round 8 window (VERDICT r7 item 1): the SECOND and FINAL backlog
-# burn-down window — all 47 still-never-driver-sampled queries (the
-# session-3/4/5 tail) + the first 3 r3 source/sink scans
-# (scan_rest_json, scan_chan_json, scan_chan_catalog) = exactly 50.
-# After this window the never-sampled backlog is 47 -> 0; every
-# registered query will then hold at least one hard driver check.
-# Head = the four r8-touched queries per the rotation rule
-# ("rewritten since last round" outranks all): join_bloom_pruned
-# (fp_rate nullif guard, r8 empty-orders sweep), and the three
-# consumers of the shared _pq_sql quantile device which grew its
-# n=0 CASE guard (agg_quantile_sketch_audit, agg_mad_robust,
-# agg_trend_theil_sen). sink_sorted_runs was also touched (read-back
-# schema pin) but holds a GREEN r7 hard check and the change is
-# vanilla-verified hash-identical, so per the r6 sweep precedent it
-# does not re-consume a slot.
-# Round 9 window (VERDICT r8 item 1, the staleness burn): head = the
-# three operators ADDED this round (ext_dedup_substr_spans /
-# ext_dedup_pipeline_recall / scan_schema_drift_audit — "added or
-# rewritten since last round" outranks all), then EVERY query whose
-# latest hard driver check is r3 (37: the remaining 4 r3 scans, the
-# 14 dash_* routes, the streaming family, orchestration/vacuum/memo,
-# the fingerprint/props/text-quality/token-count trios, and the
-# rows-only ext_sim_lsh / ext_sim_ivf / ext_mm_resize_stub), then the
-# first 10 r4-checked tags in registration order = exactly 50. After
-# this window the oldest evidence tier is r4 (39 remaining r4 tags —
-# r10's natural head, plus whatever r10 adds or rewrites).
-# Round 10 window (VERDICT r9 item 1, the r3/r4 staleness burn): head
-# = anything added or rewritten this round (rotation rule (1)): new
-# operators go at the very top as they land, then the four
-# r9-ADVICE-touched queries whose Spark plan or oracle CHANGED
-# (agg_time_spine_fill's oracle type-universe gate,
-# ext_sample_temperature's oracle coalesce, and the embcos-LSH pair
-# which additionally sit in the r4 tier). Then the full r3 tier (8)
-# and the r4 tier in registration order until the 50-slot window is
-# spent. 57 stale tags + head adds > 50, so the r4 tail
-# (ext_sample_mixture onward) spills to r11's natural head.
-# Round 11 window (VERDICT r10 items 3/4/6): head = the three r11
-# adds (retrieval-eval kit, incremental datacard, BPE round-trip),
-# then every query whose Spark plan or oracle CHANGED this round —
-# the three ex-`no_oracle` miners that gained hard oracles with
-# fold-exact rewrites (ext_sim_ivf / ext_sim_lsh /
-# ext_dedup_embcos_lsh), their verify/recall siblings (consume the
-# changed miners), the two r10-ADVICE fixes (ext_rank_rbo inlined
-# nano-term literals; ext_datacard_diff balanced-churn filter), and
-# the miner family restructured onto the session-pinned pair graph
-# (ngram_jaccard / minhash / both pipelines / pipeline_recall) —
-# then the final r4 evidence tier (r10 item 3; 16 tags, of which
-# ext_sim_ivf_exhaustive and ext_sim_lsh_verify already sit in the
-# rewrite block), then r5 tags in registration order to fill the 50
-# slots. After this window the oldest evidence tier is r5.
-# (ext_bpe_apply was refactored onto the shared _bpe_seq_expr helper
-# with a character-identical expression — per the r8 sink_sorted_runs
-# precedent it does not re-consume a slot. The components/census/
-# graph consumers of the pinned pair graph keep their plans' shapes
-# and r10 checks; the pin changes WHERE the miner result comes from,
-# not what any of them compute — all were re-verified green at
-# sf0.01 this round, log in tools/.)
-# Round 12 window (VERDICT r11 items 1/2/3/6): head = the five r12
-# adds (eval-coverage source decomposition, 1-bit Hamming pair miner
-# + its end-to-end components chain, incremental embcos dedup in
-# both its exact-probe and LSH-probe arms), then
-# every query whose Spark plan
-# CHANGED this round — the LSH family rewritten onto JVM-side bucket
-# keys + the broadcastable oversized-bucket salt map (ext_sim_lsh,
-# ext_dedup_embcos_lsh + _verify, ext_sim_lsh_verify/_recall), and
-# the embcos family restructured onto the session-pinned exact pair
-# graph (ext_dedup_embcos, ext_dedup_semantic,
-# ext_dedup_embcos_pipeline_recall) — then the FULL r5 evidence tier
-# (r11 item 3; 31 tags — ext_dedup_semantic already sits in the
-# rewrite block), then r6 tags in registration order filling the 50
-# slots. After this window the oldest tier is r6. (ext_sim_ivf
-# gained only a Python-side dim assert and ext_sim_topk_bitsign's
-# packing strings are character-identical after the p-parameterized
-# refactor — per the r8 sink_sorted_runs precedent neither
-# re-consumes a slot.)
-# Round 13 window (VERDICT r12 items 2/3): head = the six r13 adds
-# (incremental MinHash probe, URL×content cross dedup, streaming
-# embcos incremental chain, incremental phash media dedup — the
-# fourth landed with the phash_pairs session pin, whose two
-# rewritten consumers sit in the r6 tier below — the re-crawl
-# frontier scheduler over the shared snapshot universe, and the
-# incremental embedding-drift probe), then the
-# six HEADLINE rewrites whose
-# Spark plan changed this round — the session-pinned LM doc-score
-# frame's two direct emitters (ext_lm_unigram_score /
-# ext_lm_perplexity_buckets; verdict item 1), the LSH miner family's
-# compute_once + AQE-brokered oversized-map join (ext_sim_lsh /
-# ext_dedup_embcos_lsh and the incremental probe arm over the
-# changed pin), and the late-data audit's parquet-sink conversion —
-# then the FULL r6 evidence tier (r12 item 2; 38 tags, of which
-# ext_curation_scorecard and ext_url_canonical are ALSO rewrites:
-# scorecard consumes the new LM pin, url_canonical was refactored
-# onto the shared canon helpers with character-identical output),
-# then the remaining rewrites fill and overflow the 50 slots:
-# ext_dedup_embcos_pipeline_recall + the two LSH verify arms make
-# 50; ext_sim_lsh_recall and the two hamming ops (id-guard
-# passthrough added to the shared universe; all three hold fresh
-# r11/r12 checks and full local certification) are the 51st-53rd
-# tags and stay at the r14 head. After this window the oldest
-# evidence tier is r7 (49 tags — r14's natural window).
-# Round 14 window (VERDICT r13 items 2/8, the r7 staleness burn):
-# head = the three r13 overflow rewrites (above), then every query
-# whose Spark plan CHANGED this OPTIMIZATION round — the four
-# un-pinned single-consumer queries (components / phash_cluster /
-# ivf_exhaustive / sim_lsh now rebuild per invocation; verdict r13
-# item 2), the pipeline-recall certificate's compute_once LSH arm,
-# the lm_bigram_score instance-stream pin (item 3), the fused
-# retrieval-eval aggregation (item 4), the weighted-jaccard
-# pin-riding rewrite (item 5), the two iterative-loop stage fusions
-# (item 6), and the six consumers whose pinned shingle_inter/sizes
-# frames gained the wi/tw columns or whose census now aggregates the
-# pinned doc-carried instance stream — then the r7 evidence tier in
-# registration order filling the 50 slots (31 of 46 remaining r7
-# tags; the r7 tail — agg_occupancy_hours onward — spills to r15's
-# natural head alongside whatever r15 touches).
 _WINDOW_PRIORITY = (
     # -- r13 overflow rewrites (held fresh r11/r12 checks; certified
     #    locally in r13, hard-checked here) --
@@ -231,125 +116,6 @@ _WINDOW_PRIORITY = (
     "ext_gopher_repetition",
     "ext_tokenizer_fertility",
     "ext_source_overlap_matrix",
-)
-
-# Round 13 window, retired (kept for the evidence-rotation history):
-_R13_WINDOW = (
-    # -- added r13 --
-    "ext_dedup_minhash_incremental",
-    "ext_dedup_url_content_cross",
-    "stream_embcos_incremental_chain",
-    "ext_mm_dedup_phash_incremental",
-    "ext_url_frontier_schedule",
-    "ext_emb_drift_incremental",
-    # -- headline rewrites (plan changed): pinned LM doc-score frame;
-    #    LSH miner compute_once + AQE oversized-map join; parquet
-    #    late-audit sink --
-    "ext_lm_unigram_score",
-    "ext_lm_perplexity_buckets",
-    "ext_sim_lsh",
-    "ext_dedup_embcos_lsh",
-    "ext_dedup_embcos_incremental_lsh",
-    "stream_late_data_audit",
-    # -- the full r6 evidence tier (r12 item 2), registration order --
-    "fn_lang_detect",
-    "udf_vader_sentiment",
-    "udf_hatespeech_api",
-    "enrich_table",
-    "stream_join_stream",
-    "stream_medallion_gold",
-    "agg_user_lifetime",
-    "agg_interevent_gap",
-    "agg_event_transitions",
-    "agg_user_gini",
-    "window_dedup_recent",
-    "join_asof_nearest",
-    "join_asof_tolerance",
-    "dash_summary_onepass",
-    "ext_corpus_curation",
-    "ext_pii_redact",
-    "ext_data_split",
-    "ext_dataset_diff",
-    "ext_dedup_cluster_census",
-    "ext_graph_degree_census",
-    "ext_dedup_component_census",
-    "ext_dedup_minhash_eval",
-    "ext_doc_dup_profile",
-    "ext_graph_pagerank",
-    "ext_emb_centroids_int8",
-    "ext_label_balance",
-    "ext_sim_topk",
-    "ext_length_histogram",
-    "ext_vocab_census",
-    "ext_url_canonical",
-    "ext_lang_id_eval",
-    "ext_topterms_per_lang",
-    "ext_social_tags",
-    "ext_sample_stratified_exact",
-    "ext_curation_scorecard",
-    "ext_bigram_pmi",
-    "ext_mm_dedup_phash",
-    "ext_mm_phash_cluster",
-)
-
-# Round 12 window, retired (kept for the evidence-rotation history):
-_R12_WINDOW = (
-    # -- added r12 --
-    "ext_eval_coverage_by_source",
-    "ext_sim_hamming_pairs",
-    "ext_sim_hamming_components",
-    "ext_dedup_embcos_incremental",
-    "ext_dedup_embcos_incremental_lsh",
-    # -- rewritten r12 (plan changed): JVM-side LSH bucketing
-    #    + oversized-bucket salt map; session-pinned embcos pair
-    #    graph and its consumers --
-    "ext_sim_lsh",
-    "ext_dedup_embcos_lsh",
-    "ext_dedup_embcos_lsh_verify",
-    "ext_sim_lsh_verify",
-    "ext_sim_lsh_recall",
-    "ext_dedup_embcos",
-    "ext_dedup_semantic",
-    "ext_dedup_embcos_pipeline_recall",
-    # -- the full r5 evidence tier (r11 item 3), registration order --
-    "sort_by_time",
-    "sort_desc_limit",
-    "limit_n",
-    "window_rank_latest",
-    "union_pages",
-    "union_platforms",
-    "fn_strip_urls",
-    "fn_normalize_text",
-    "udf_clean_comment",
-    "fn_strip_html",
-    "fn_epoch_to_ts",
-    "fn_parse_iso_ts",
-    "fn_date_format",
-    "fn_json_parse",
-    "fn_null_guards",
-    "fn_sentiment_bucket",
-    "fn_hate_flag",
-    "ext_dedup_exact",
-    "udtf_explode_shingles",
-    "ext_dedup_simhash",
-    "agg_cube",
-    "join_bucketed_colocated",
-    "join_asof",
-    "agg_percentiles",
-    "ext_pack_sequences",
-    "ext_dedup_incremental_bucketed",
-    "ext_sim_knn_graph",
-    "agg_sessionize_batch",
-    "ext_mm_pair_filter",
-    "ext_lm_perplexity_buckets",
-    "ext_corpus_datacard",
-    # -- oldest remaining tier (r6), registration order --
-    "sink_partitioned_prune",
-    "agg_funnel_steps",
-    "agg_retention_cohorts",
-    "agg_rolling_wau",
-    "agg_ingest_anomaly",
-    "agg_ewma_volume",
 )
 
 

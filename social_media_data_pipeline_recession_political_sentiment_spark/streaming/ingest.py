@@ -20,14 +20,20 @@ guarantee (the scalable form of the reference's probe — one join per
 micro-batch, not 2 round-trips per row).
 
 Rate limiting (`Reddit.py:23-24,37-59`) maps to source-side
-`maxFilesPerTrigger` — the engine's token bucket is files per
+`maxFilesPerTrigger=1` — the engine's token bucket is one file per
 micro-batch; HTTP-level backoff stays in the fetcher outside the
 engine.
+
+Both drains here (the silver ingest and `stream_rate_limit`) run
+through `streaming.queries.drain`, the package's one availableNow
+lifecycle; only the polling `processingTime` trigger of
+`ingest_to_silver` starts a query of its own.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,19 +45,19 @@ from ..sources.rest_json import (
     REDDIT_LISTING_SCHEMA,
     flatten_reddit_listing,
 )
+from .queries import drain
 
 SILVER_COMMENT_COLS = ["subreddit", "post_id", "body", "score", "created_utc", "comment_id"]
 
 
-def read_bronze_stream(
-    spark: SparkSession, bronze_dir: str, max_files_per_trigger: int | None = 1
-) -> DataFrame:
-    """Micro-batch file source over landed payloads. max_files_per_trigger
-    is the ingest rate limit (SURVEY §2.9 `stream_rate_limit`)."""
-    reader = spark.readStream.schema(REDDIT_LISTING_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(bronze_dir)
+def read_bronze_stream(spark: SparkSession, bronze_dir: str) -> DataFrame:
+    """Micro-batch file source over landed payloads, one file per
+    micro-batch: the ingest rate limit (SURVEY §2.9 `stream_rate_limit`)."""
+    return (
+        spark.readStream.schema(REDDIT_LISTING_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(bronze_dir)
+    )
 
 
 def ingest_to_silver(
@@ -59,16 +65,15 @@ def ingest_to_silver(
     bronze_dir: str,
     silver_dir: str,
     checkpoint_dir: str,
-    watermark: str = "12 hours",
     available_now: bool = True,
 ):
-    """Run the collector pipeline: flatten → watermark dedup →
+    """Run the collector pipeline: flatten → 12-hour watermark dedup →
     foreachBatch anti-join append. Returns the StreamingQuery.
-    availableNow=True is the Airflow-DAG batch run
-    (`Airflow.py:10,95-102`); processingTime triggers give the
-    reference's poll cadences."""
+    available_now=True is the Airflow-DAG batch run
+    (`Airflow.py:10,95-102`), returned already drained; the
+    processingTime trigger gives the reference's poll cadences."""
     flat = flatten_reddit_listing(read_bronze_stream(spark, bronze_dir))
-    deduped = flat.withWatermark("created_utc", watermark).dropDuplicates(["comment_id"])
+    deduped = flat.withWatermark("created_utc", "12 hours").dropDuplicates(["comment_id"])
 
     def upsert(batch: DataFrame, epoch_id: int) -> None:
         # anti-join against sink keys: idempotent across restarts
@@ -81,22 +86,16 @@ def ingest_to_silver(
         batch.select(*SILVER_COMMENT_COLS).write.mode("append").parquet(silver_dir)
 
     writer = deduped.writeStream.foreachBatch(upsert).option("checkpointLocation", checkpoint_dir)
-    trigger = {"availableNow": True} if available_now else {"processingTime": "1 seconds"}
+    if available_now:
+        return drain(spark, writer, 4)
     # dedup state partitions bind to shuffle.partitions when the first
-    # micro-batch is planned (start() is async), so the pinned conf must
-    # stay active until batch 0 has been planned: drained runs hold it
-    # for the whole drain; processingTime runs hold it until the query
-    # reports progress. Cluster deployments size this to cardinality.
+    # micro-batch is planned (start() is async), so a polling run holds
+    # the pin until the query reports progress
     with scoped_shuffle_partitions(spark, 4):
-        q = writer.trigger(**trigger).start()
-        if available_now:
-            q.awaitTermination()
-        else:
-            import time
-
-            deadline = time.monotonic() + 30
-            while not q.recentProgress and time.monotonic() < deadline:
-                time.sleep(0.1)
+        q = writer.trigger(processingTime="1 seconds").start()
+        deadline = time.monotonic() + 30
+        while not q.recentProgress and time.monotonic() < deadline:
+            time.sleep(0.1)
     return q
 
 
@@ -131,15 +130,11 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.copy(REDDIT_LISTING_FIXTURE, os.path.join(bronze, f"page_{i}.json"))
 
     batches: list[int] = []
-    flat = flatten_reddit_listing(read_bronze_stream(spark, bronze, max_files_per_trigger=1))
-    with scoped_shuffle_partitions(spark, 4):
-        q = (
-            flat.writeStream.foreachBatch(lambda b, _e: batches.append(b.count()))
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    flat = flatten_reddit_listing(read_bronze_stream(spark, bronze))
+    writer = flat.writeStream.foreachBatch(lambda b, _e: batches.append(b.count())).option(
+        "checkpointLocation", os.path.join(work, "ckpt")
+    )
+    drain(spark, writer, 4)
     return spark.createDataFrame(
         [(len(batches), sum(batches))], "n_batches bigint, n_rows bigint"
     )
@@ -175,8 +170,7 @@ def stream_microbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     bronze, silver, ckpt = (os.path.join(work, d) for d in ("bronze", "silver", "ckpt"))
     os.makedirs(bronze)
     shutil.copy(REDDIT_LISTING_FIXTURE, os.path.join(bronze, "page_0.json"))
-    q = ingest_to_silver(spark, bronze, silver, ckpt)
-    q.awaitTermination()
+    ingest_to_silver(spark, bronze, silver, ckpt)
     return (
         spark.read.parquet(silver)
         .select("comment_id", "subreddit", "score", "created_utc")

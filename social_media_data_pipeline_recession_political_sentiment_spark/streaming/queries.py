@@ -28,6 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import load, ntz_as_utc_instant
 from ..functions.hashing import doc_bucket_sql
@@ -100,26 +101,38 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def drain_to_table(
-    stream_df: DataFrame, output_mode: str, state_partitions: int = 8
-) -> DataFrame:
-    """Run the streaming query to completion (availableNow = the
-    DAG-style batch run) into a memory sink; return the sink table.
+def drain(
+    spark: SparkSession, writer: DataStreamWriter, state_partitions: int
+) -> StreamingQuery:
+    """THE availableNow drain of the package (the DAG-style batch run):
+    start `writer` with the run-to-completion trigger, wait for it, and
+    return the terminated query (its `recentProgress` carries the
+    per-batch metrics). Every sink shape goes through here — memory,
+    parquet and foreachBatch.
 
-    State-store partition count binds to shuffle.partitions at query
-    start and AQE can't coalesce stateful stages, so it is pinned
-    small here; a cluster deployment sizes it to key cardinality."""
-    name = f"sink_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(stream_df.sparkSession, state_partitions):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+    State-store partition count binds to shuffle.partitions when the
+    first micro-batch is planned (start() is async) and AQE can't
+    coalesce stateful stages, so the pin holds for the whole drain and
+    is restored even when a batch raises; a cluster deployment sizes
+    it to key cardinality."""
+    with scoped_shuffle_partitions(spark, state_partitions):
+        q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+    return q
+
+
+def drain_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
+    """`drain` the streaming query into a memory sink and return its
+    table. The resolved frame keeps the sink's rows, so the sink's temp
+    view is dropped at once: repeated drains in one long-lived session
+    leave nothing behind in the catalog."""
+    spark = stream_df.sparkSession
+    name = f"sink_{uuid.uuid4().hex[:8]}"
+    writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    drain(spark, writer, 8)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @register(
@@ -507,16 +520,13 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a 1-row frame; the only driver-side values are the P scalar
     # progress metrics the drop counter always read.
     out_dir = os.path.join(work, "out")
-    with scoped_shuffle_partitions(spark, 4):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    writer = (
+        agg.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+    )
+    q = drain(spark, writer, 4)
     dropped = sum(
         so.get("numRowsDroppedByWatermark", 0)
         for p in q.recentProgress
@@ -601,12 +611,7 @@ def drain_keyed_upsert(spark: SparkSession, src: DataFrame) -> DataFrame:
         )
         state["df"] = merged.localCheckpoint()
 
-    q = (
-        src.writeStream.foreachBatch(_merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, src.writeStream.foreachBatch(_merge_batch), 8)
     final = state["df"]
     if final is None:  # empty source
         final = spark.createDataFrame(
@@ -804,13 +809,7 @@ def drain_incremental_dedup(
             )
         state["index"] = idx.localCheckpoint()
 
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            incr_stream.writeStream.foreachBatch(_fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(spark, incr_stream.writeStream.foreachBatch(_fold_batch), 8)
     if not batches:  # empty source
         rows = spark.createDataFrame([], "doc_id long, h string")
         index = spark.createDataFrame([], "h string, first_doc long")
@@ -912,13 +911,7 @@ def drain_datacard(spark: SparkSession, doc_stream: DataFrame) -> DataFrame:
         # one bounded frame per batch; checkpoint cuts the B-deep lineage
         state["card"] = cells.localCheckpoint()
 
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            doc_stream.writeStream.foreachBatch(_fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(spark, doc_stream.writeStream.foreachBatch(_fold_batch), 8)
     if state["card"] is None:  # empty source
         return spark.createDataFrame(
             [],
@@ -1053,13 +1046,7 @@ def drain_embcos_incremental(
             rows.join(F.broadcast(dob), "vec_id", "left").localCheckpoint()
         )
 
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            incr_stream.writeStream.foreachBatch(_probe_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(spark, incr_stream.writeStream.foreachBatch(_probe_batch), 8)
     if not batches:  # empty source
         rows = spark.createDataFrame(
             [], "vec_id long, dv array<double>, nrm double, f_base boolean"

@@ -6,13 +6,22 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
+import re
 import shutil
 import tempfile
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from social_media_data_pipeline_recession_political_sentiment_spark.sources.rest_json import (
     REDDIT_LISTING_FIXTURE,
+)
+from social_media_data_pipeline_recession_political_sentiment_spark import streaming
+from social_media_data_pipeline_recession_political_sentiment_spark.streaming.queries import (
+    drain,
+    drain_to_table,
 )
 from social_media_data_pipeline_recession_political_sentiment_spark.streaming.ingest import (
     ingest_to_silver,
@@ -569,3 +578,63 @@ def test_embcos_incremental_chain_merges_across_batches(spark):
     assert out[50].is_new and not out[50].dup_of_base
     # zero norm -> NULL cosine fails every >= t cut on both sides
     assert out[11].is_new and not out[11].dup_of_base and not out[11].dup_in_increment
+
+
+def _id_stream(spark, ids):
+    """File-source stream over one parquet file holding `ids`."""
+    src = tempfile.mkdtemp(prefix="smdp_drain_")
+    spark.createDataFrame([(i,) for i in ids], "id long").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(src)
+    return spark.readStream.schema("id long").parquet(src)
+
+
+def test_drain_to_table_leaves_no_sink_views(spark):
+    """Repeated memory-sink drains in one long-lived session must not
+    grow the catalog: each `drain_to_table` drops its sink view, and
+    the frame it returns still holds the drained rows."""
+    outs = [
+        drain_to_table(_id_stream(spark, range(10 * k, 10 * k + k + 1)), "append")
+        for k in range(5)
+    ]
+    left = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("sink_")
+    ]
+    assert left == []
+    for k, out in enumerate(outs):
+        assert sorted(r.id for r in out.collect()) == list(range(10 * k, 10 * k + k + 1))
+
+
+def test_drain_failure_propagates_and_restores_shuffle_partitions(spark):
+    """A foreachBatch drain whose batch function raises must surface the
+    error to the caller, and the state-partition pin that was active
+    during the batch must be undone afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    pin = int(before) + 3
+    seen = []
+
+    def boom(batch_df, batch_id):
+        seen.append(batch_df.sparkSession.conf.get(key))
+        raise RuntimeError("batch function failed")
+
+    writer = _id_stream(spark, [1, 2]).writeStream.foreachBatch(boom)
+    with pytest.raises(StreamingQueryException, match="batch function failed"):
+        drain(spark, writer, pin)
+    assert seen == [str(pin)]
+    assert spark.conf.get(key) == before
+
+
+def test_streaming_has_one_available_now_trigger():
+    """Every availableNow drain under streaming/ goes through
+    `streaming.queries.drain`: the trigger is spelled exactly once, so a
+    hand-written copy of the drain lifecycle cannot creep back in."""
+    pkg = pathlib.Path(streaming.__file__).parent
+    hits = [
+        (src.name, m.group(0))
+        for src in sorted(pkg.glob("*.py"))
+        for m in re.finditer(r"availableNow[\"']?\s*[=:]\s*True", src.read_text())
+    ]
+    assert len(hits) == 1, hits
