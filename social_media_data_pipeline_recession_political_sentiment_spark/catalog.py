@@ -47,6 +47,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Memoized per (application, realpath, table, source-fingerprint) —
     see _LOAD_MEMO above; `_load_build` is the actual scan plan.
 
+    Self-join constraint: every caller with the same key gets the SAME
+    DataFrame instance, so two `load` results of one table share
+    attribute ids. A join between them on DataFrame attributes
+    (`a["x"] == b["y"]`) is ambiguous to Spark's analyzer; callers
+    must `alias()` each side and join on `F.col("a.x")`-style
+    qualified names, or join on string keys.
+
     Timestamp normalization (the "one choke point" of session.py's
     docstring): driver testdata has shipped ts columns in two parquet
     encodings across rounds — TIMESTAMP(NANOS) (unreadable by Spark's

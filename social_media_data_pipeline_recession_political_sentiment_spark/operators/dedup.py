@@ -24,6 +24,7 @@ these operators are the north-star extension grounded in the
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -578,13 +579,17 @@ def _shingle_pair_intersections(spark: SparkSession, sf_dir: str):
     four self-joins with one."""
     sh = _shingles_pinned(spark, sf_dir)
 
+    @functools.cache
     def _idf_weights() -> DataFrame:
         """Per-shingle idf-milli weights — `ext_dedup_weighted_jaccard`'s
         exactness device (round(ln(N/df)*1000) as BIGINT), computed
         inside the pin builds below so the ONE shingle self-join
         yields both the plain count and the weighted intersection
         (r14, verdict r13 item 5). compute_once: the SAME weights
-        frame feeds the sizes build and the intersection build."""
+        frame feeds the sizes build and the intersection build.
+        Lazy and memoized per call: built only when a pin build
+        fires, at most once, so a call whose two pins both hit plans
+        no weights frame at all."""
         n = _load_docs(spark, sf_dir).agg(F.count("*").alias("nd"))
         dfq = sh.groupBy("s").agg(F.count("*").alias("df"))
         return compute_once(
@@ -598,21 +603,16 @@ def _shingle_pair_intersections(spark: SparkSession, sf_dir: str):
             )
         )
 
-    # ONE weights frame for both pin builds below (they normally
-    # trigger in the same first invocation, so the compute_once
-    # materializes once)
-    w = _idf_weights()
-
     # the per-doc size frame is a full pass over the pinned shingle
     # relation — pinned too since r13 (four consumers re-ran it).
     # Since r14 it also carries the per-doc idf-weight total `tw`
     # (Σ iw over the doc's distinct shingles): the idf join keeps
-    # every sh row exactly once (w has one row per distinct s), so
+    # every sh row exactly once (one weight row per distinct s), so
     # `n` is bit-identical and the weighted miner stops re-deriving
     # the whole weighted-postings relation per invocation.
     def _build_sizes() -> DataFrame:
         return (
-            sh.join(w, "s")
+            sh.join(_idf_weights(), "s")
             .groupBy("doc_id")
             .agg(F.count("*").alias("n"), F.sum("iw").alias("tw"))
         )
@@ -625,7 +625,7 @@ def _shingle_pair_intersections(spark: SparkSession, sf_dir: str):
         # (i — the multiset is unchanged by the multiplicity-1 idf
         # join) and the idf-weighted intersection (wi = Σ iw over
         # shared shingles, exact BIGINT — the oracle's `sum(w.iw)`)
-        a = sh.join(w, "s").alias("a")
+        a = sh.join(_idf_weights(), "s").alias("a")
         b = sh.alias("b")
         return (
             a.join(
@@ -761,95 +761,21 @@ def ext_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole graph is oracle-reproducible (the oracle walks it with a
     recursive CTE).
 
-    Iterative min-label propagation as a driver-coordinated loop of
-    DataFrame ops: each round every node takes the min of its own and
-    its neighbors' labels — O(diameter) rounds, each a distributed
-    join + agg (diameter is tiny for dedup graphs, which are
-    near-cliques). `localCheckpoint` cuts the growing lineage per
-    round (the classic Spark iterative-algorithm trap); the edge list
-    is re-partitioned on src once and reused every round. At larger
-    diameters you'd switch to large-star/small-star (Kiveris et al.,
-    "Connected Components in MapReduce"), same DataFrame vocabulary.
+    Computed by large-star/small-star (`_large_small_star`, the one
+    connected-components device): O(log^2 n) rounds for any graph
+    diameter, each a distributed min-agg + join over the edge list.
 
     The r13 `lp_components` session pin was DROPPED in r14 (verdict
     r13 item 2 — pin economics): this query was the pin's ONLY
     consumer and the pin WAS the whole query result, so the only
     thing it "optimized" was the bench's own second pass — a
-    memoization, not a speedup. The label-prop loop now runs per
-    invocation again (reading the shared `jaccard_pairs` pin, which
-    keeps the expensive miner shared); the honest cost is the loop
-    itself."""
+    memoization, not a speedup. The contraction therefore runs per
+    invocation (reading the shared `jaccard_pairs` pin, which keeps
+    the expensive miner shared) and deliberately does NOT read the
+    `lss_components` pin; the honest cost is the round loop itself."""
     docs = load(spark, sf_dir, "documents").select("doc_id")
     pairs = ext_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    return _label_propagate(docs, pairs)
-
-
-LABEL_PROP_MAX_ROUNDS = 50  # >= graph diameter; dedup graphs converge in a few
-
-
-def _label_propagate(docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Min-label propagation over an undirected pair graph; returns
-    (doc_id, component) with component = min reachable doc_id.
-    Raises RuntimeError if the graph's effective diameter exceeds
-    LABEL_PROP_MAX_ROUNDS instead of returning unconverged labels.
-
-    Checkpoints are LAZY (eager=False, r9 perf pass): the per-round
-    convergence collect is a full pass over the new labels anyway, so
-    it doubles as the checkpoint materialization — ONE distributed
-    job per round instead of two (eager checkpoint + collect), worth
-    ~10-15% on the whole component family at sf0.1. The
-    `compute_once` fault-tolerance caveats apply unchanged
-    (localCheckpoint cuts lineage; executor loss fails the job)."""
-    # self-loops make each round a single join+agg: a node's new label
-    # is min over ALL incoming edges, its own label arriving via the
-    # self-edge (no second left-join to merge it back)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .unionByName(
-            docs.select(F.col("doc_id").alias("src"), F.col("doc_id").alias("dst"))
-        )
-        .repartition("src")
-        # materialized by round 1's action; reused every round after
-        .localCheckpoint(eager=False)
-    )
-    labels = docs.select("doc_id", F.col("doc_id").alias("lbl")).localCheckpoint(
-        eager=False
-    )
-    # labels only ever decrease, so convergence <=> the label sum stops
-    # moving — one scalar agg per round instead of a join + count
-    # (decimal(38,0) keeps the sum exact at any corpus size)
-    prev_sum = labels.agg(
-        F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
-    converged = False
-    for _ in range(LABEL_PROP_MAX_ROUNDS):
-        labels = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = labels.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # a silent exit here would return WRONG component labels for any
-        # graph whose effective diameter exceeds the round budget (e.g. a
-        # >LABEL_PROP_MAX_ROUNDS-long chain of near-dup docs) — fail loud;
-        # the fix at that scale is large-star/small-star, not more rounds
-        raise RuntimeError(
-            f"label propagation did not converge within {LABEL_PROP_MAX_ROUNDS} "
-            "rounds: pair-graph diameter exceeds the budget; switch to "
-            "large-star/small-star (Kiveris et al.) for this graph"
-        )
-    return labels.select("doc_id", F.col("lbl").alias("component"))
+    return _large_small_star(docs, pairs)
 
 
 LSS_MAX_ROUNDS = 64  # covers the O(log^2 n) bound at any feasible corpus size
@@ -859,25 +785,24 @@ LSS_MAX_ROUNDS = 64  # covers the O(log^2 n) bound at any feasible corpus size
 def ext_dedup_components_lss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the high-diameter path that `ext_dedup_components`'
-    label propagation names as its fallback, implemented for real.
+    SoCC'14) read from the session-shared assignment
+    (`_lss_components_shared`).
 
     Same input graph (exact-Jaccard near-dup pairs), same output
-    contract (doc_id -> component = min reachable doc_id), same
-    recursive-CTE oracle — so the driver hash-checks that both
-    algorithms agree with the ground truth.
+    contract (doc_id -> component = min reachable doc_id) and same
+    recursive-CTE oracle as `ext_dedup_components`; the two names
+    differ only in the seam: this one serves the `lss_components`
+    pin that the component census shares, `ext_dedup_components`
+    runs the contraction per invocation.
 
-    Why this exists: label propagation runs O(diameter) rounds — fine
-    for near-clique dedup graphs, quadratic-feeling on a chain of
-    near-duplicate documents (crawl shards often produce exactly
-    that: boilerplate chains). Star contraction converges in
-    O(log^2 n) rounds REGARDLESS of diameter: each large-star hangs
-    every node's larger neighbors onto its minimum, each small-star
-    re-points smaller neighbors at the running minimum, and the graph
-    collapses toward one star per component. Each round is two
-    (min-agg + join) passes over the edge list — the same shuffle
-    vocabulary as one label-prop round, just with a provably bounded
-    round count."""
+    Star contraction converges in O(log^2 n) rounds REGARDLESS of
+    diameter — a chain of near-duplicate documents (crawl shards
+    often produce exactly that: boilerplate chains) costs no more
+    rounds than a near-clique: each large-star hangs every node's
+    larger neighbors onto its minimum, each small-star re-points
+    smaller neighbors at the running minimum, and the graph collapses
+    toward one star per component. Each round is two (min-agg +
+    join) passes over the edge list."""
     return _lss_components_shared(spark, sf_dir)
 
 
@@ -928,7 +853,8 @@ def _large_small_star(docs: DataFrame, pairs: DataFrame) -> DataFrame:
         .where(F.col("u") != F.col("v"))
         .distinct()
         # lazy: the first _summary collect materializes it (r9 perf
-        # pass — one job per round, the _label_propagate note)
+        # pass — the per-round summary collect doubles as the
+        # checkpoint materialization, one job per round instead of two)
         .localCheckpoint(eager=False)
     )
 
@@ -1043,7 +969,7 @@ def _gated_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pipeline_comp_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SESSION-SHARED component assignment (doc_id, component) over the
-    GATED exact-Jaccard pair graph — the label-prop stage of
+    GATED exact-Jaccard pair graph — the star-contraction stage of
     `ext_dedup_pipeline`, consumed there AND (via the composed plan) by
     `ext_dedup_pipeline_recall` (r13 optimization pass: the iterative
     round loop is eager driver-coordinated work that ran once per
@@ -1058,7 +984,7 @@ def _pipeline_comp_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(gids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
             .join(gids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
         )
-        return _label_propagate(gids, pairs)
+        return _large_small_star(gids, pairs)
 
     return session_pin(spark, sf_dir, "pipeline_comp", _build)
 
@@ -1066,7 +992,7 @@ def _pipeline_comp_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pipeline_mh_comp_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SESSION-SHARED component assignment over the gated
     BANDED-CANDIDATE-verified pair graph — `ext_dedup_pipeline_minhash`'s
-    label-prop stage, consumed there and by
+    star-contraction stage, consumed there and by
     `ext_dedup_pipeline_recall`'s banded arm (r13, same rationale as
     `_pipeline_comp_pinned`)."""
 
@@ -1079,7 +1005,7 @@ def _pipeline_mh_comp_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(gids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
             .join(gids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
         )
-        return _label_propagate(gids, pairs)
+        return _large_small_star(gids, pairs)
 
     return session_pin(spark, sf_dir, "pipeline_mh_comp", _build)
 
@@ -1097,14 +1023,15 @@ def ext_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph restricted to gated docs — sound because Jaccard is a
     pairwise function: pairs(gated corpus) ≡ pairs(full corpus) with
     both endpoints gated, so the dominant shingle equi-join runs once
-    per session, not once per pipeline (r10 verdict item 2). Label
-    propagation runs O(diameter) join+agg rounds; the pick is two
-    window functions on one exchange. At deployment the exact-Jaccard
-    pair stage swaps for MinHash banding (`ext_dedup_minhash`) — same
-    downstream graph machinery, sub-quadratic candidate generation;
-    exact pairs keep this composition oracle-checkable end to end
-    (recursive CTE on the DuckDB side). The component assignment is a
-    SESSION pin since r13 (`_pipeline_comp_pinned`): the label-prop
+    per session, not once per pipeline (r10 verdict item 2).
+    Large-star/small-star runs O(log^2 n) join+agg rounds; the pick
+    is two window functions on one exchange. At deployment the
+    exact-Jaccard pair stage swaps for MinHash banding
+    (`ext_dedup_minhash`) — same downstream graph machinery,
+    sub-quadratic candidate generation; exact pairs keep this
+    composition oracle-checkable end to end (recursive CTE on the
+    DuckDB side). The component assignment is a
+    SESSION pin since r13 (`_pipeline_comp_pinned`): the component
     round loop ran per invocation before — here AND inside
     `ext_dedup_pipeline_recall`'s exact arm."""
     from pyspark.sql import Window as W
@@ -1180,7 +1107,8 @@ def ext_dedup_pipeline_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-collisions; the Jaccard verify joins shingles ONLY for
     candidate pairs (cost linear in candidates × shingles/doc, never
     all-pairs — the piece the exhaustive pipeline can't claim);
-    components and pick reuse the proven label-prop/window machinery.
+    components and pick reuse the proven star-contraction/window
+    machinery.
 
     Both mining stages read the SESSION pins (r10 verdict item 2):
     banding and the exact-Jaccard verify are pairwise functions, so
@@ -1191,7 +1119,7 @@ def ext_dedup_pipeline_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted to gated endpoints — three broadcast-sized semi-joins
     replacing a per-query re-mine, identical output by construction,
     same oracle. The component assignment is a SESSION pin since r13
-    (`_pipeline_mh_comp_pinned` — the label-prop loop ran per
+    (`_pipeline_mh_comp_pinned` — the component round loop ran per
     invocation here and in `ext_dedup_pipeline_recall`'s banded arm)."""
     from pyspark.sql import Window as W
 
@@ -1420,8 +1348,8 @@ s{k} AS (SELECT n.doc_id,
 @register("ext_graph_pagerank", oracle=_pagerank_oracle())
 def ext_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the near-dup similarity graph — graph-based
-    authority scoring, the third iterative-graph algorithm beside
-    label propagation and large-star/small-star: a document tied into
+    authority scoring, the iterative-graph algorithm beside
+    large-star/small-star components: a document tied into
     a dense near-dup neighborhood accumulates score (template hub),
     an isolated document settles at the damping base. Web-scale
     curation uses exactly this family as a quality prior
@@ -1438,9 +1366,8 @@ def ext_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the edge+degree table builds once and
     localCheckpoints; each of the K rounds is one src-keyed hash join
-    (scores are (id, long) pairs — narrow) and one dst-keyed sum agg,
-    the label-propagation motion pattern. No driver-side graph state;
-    K is fixed, not data-dependent."""
+    (scores are (id, long) pairs — narrow) and one dst-keyed sum agg.
+    No driver-side graph state; K is fixed, not data-dependent."""
     pairs = ext_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.select(
         F.col("doc_a").alias("s"), F.col("doc_b").alias("d")
@@ -1628,9 +1555,9 @@ def ext_graph_degree_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree histogram of the near-dup similarity graph (degree 0 =
     isolated docs included): the one-glance shape report on a dedup
     graph — a heavy tail here means template hubs, which predicts
-    both `ext_dedup_components` round counts and where
-    `ext_graph_pagerank` mass will concentrate. Run it BEFORE the
-    iterative algorithms to choose label-prop vs LSS.
+    where `ext_graph_pagerank` mass will concentrate and how wide
+    the star contraction's first-round edge frames get
+    (`ext_dedup_components`).
 
     Scale shape: reuses the sub-quadratic pair miner, then two keyed
     count aggs — node-keyed degree (≤2 rows per pair in motion) and

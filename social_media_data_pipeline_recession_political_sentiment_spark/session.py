@@ -54,7 +54,9 @@ ENGINE_CONFS: dict[str, str] = {
 # always configured on its first query. Deliberate trade-off: a caller
 # that mutates one of these confs mid-session is no longer re-pinned on
 # the next query call — no harness path does that (the one scoped
-# mutation, scoped_shuffle_partitions, restores what it changed).
+# mutation, scoped_shuffle_partitions, restores what it changed). An
+# application is recorded only after EVERY set succeeded, so a failed
+# set is retried on the next call instead of being skipped for good.
 _CONFS_APPLIED: set = set()
 
 
@@ -64,16 +66,20 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
     Used when the driver hands us a session it built (driver contract:
     ``entry(spark)``). Only runtime-mutable confs are set here.
     Idempotent per session: subsequent calls on an already-configured
-    applicationId return immediately (see _CONFS_APPLIED)."""
+    applicationId return immediately (see _CONFS_APPLIED); a call in
+    which any set raised leaves the application unrecorded, so the
+    next call sets every conf again."""
     app = spark.sparkContext.applicationId
     if app in _CONFS_APPLIED:
         return spark
+    all_set = True
     for k, v in ENGINE_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
-            pass  # static conf on a running session -- keep going
-    _CONFS_APPLIED.add(app)
+            all_set = False  # static conf on a running session -- keep going
+    if all_set:
+        _CONFS_APPLIED.add(app)
     return spark
 
 

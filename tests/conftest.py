@@ -25,3 +25,22 @@ def spark():
     s = get_session("pytest", cpus=4)
     yield s
     s.stop()
+
+
+def union_find_components(nodes, edges) -> dict:
+    """Pure-Python connected-components reference: {node: min node
+    reachable}. Unions always hang the larger root under the smaller,
+    so every root is the minimum of its component."""
+    parent = {v: v for v in nodes}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in nodes}

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from social_media_data_pipeline_recession_political_sentiment_spark.registry import queries
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, union_find_components
 
 import os.path as _osp
 
@@ -152,36 +152,6 @@ def test_contamination_flags_overlapping_doc_only(spark):
     assert out == {20}
 
 
-def test_label_propagate_path_graph_adversarial_diameter(spark):
-    # dedup graphs are near-cliques (diameter ~2); a PATH graph is the
-    # adversarial case — labels move one hop per round, so a path of N
-    # edges needs ~N rounds. Assert convergence + correct labels well
-    # inside the round budget.
-    from social_media_data_pipeline_recession_political_sentiment_spark.operators import dedup as dd
-
-    n = 12  # diameter 12 path: 0-1-2-...-12
-    docs = spark.createDataFrame([(i,) for i in range(n + 1)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
-    )
-    out = {r.doc_id: r.component for r in dd._label_propagate(docs, pairs).collect()}
-    assert out == {i: 0 for i in range(n + 1)}  # all reach min label 0
-
-
-def test_label_propagate_raises_on_diameter_overflow(spark, monkeypatch):
-    # a diameter > round budget must FAIL LOUD, not return wrong labels
-    from social_media_data_pipeline_recession_political_sentiment_spark.operators import dedup as dd
-
-    monkeypatch.setattr(dd, "LABEL_PROP_MAX_ROUNDS", 3)
-    n = 10  # needs ~10 rounds; budget is 3
-    docs = spark.createDataFrame([(i,) for i in range(n + 1)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dd._label_propagate(docs, pairs).collect()
-
-
 def _lss_labels(spark, n_nodes, edge_list):
     from social_media_data_pipeline_recession_political_sentiment_spark.operators import dedup as dd
 
@@ -190,10 +160,36 @@ def _lss_labels(spark, n_nodes, edge_list):
     return {r.doc_id: r.component for r in dd._large_small_star(docs, pairs).collect()}
 
 
+def test_label_propagate_path_graph_adversarial_diameter(spark):
+    # dedup graphs are near-cliques (diameter ~2); a PATH graph is the
+    # adversarial case for any hop-by-hop device. Star contraction must
+    # label it exactly as the union-find reference does.
+    n = 12  # diameter 12 path: 0-1-2-...-12
+    edges = [(i, i + 1) for i in range(n)]
+    out = _lss_labels(spark, n + 1, edges)
+    assert out == union_find_components(range(n + 1), edges)
+    assert out == {i: 0 for i in range(n + 1)}  # all reach min label 0
+
+
+def test_label_propagate_raises_on_diameter_overflow(spark, monkeypatch):
+    # a round budget too small for the graph must FAIL LOUD, not
+    # return wrong labels (an 11-node path needs 5 rounds)
+    from social_media_data_pipeline_recession_political_sentiment_spark.operators import dedup as dd
+
+    monkeypatch.setattr(dd, "LSS_MAX_ROUNDS", 3)
+    n = 10
+    docs = spark.createDataFrame([(i,) for i in range(n + 1)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not reach an edge fixed point"):
+        dd._large_small_star(docs, pairs).collect()
+
+
 def test_lss_path_graph_beyond_label_prop_budget(spark):
-    # a 60-edge path exceeds LABEL_PROP_MAX_ROUNDS=50 (label prop would
-    # raise); star contraction must converge inside its O(log^2 n)
-    # budget and still label every node with the path minimum
+    # a 60-edge path: a device moving labels one hop per round would
+    # need 60 rounds; star contraction must converge inside its
+    # O(log^2 n) budget and still label every node with the path minimum
     n = 61
     out = _lss_labels(spark, n, [(i, i + 1) for i in range(n - 1)])
     assert out == {i: 0 for i in range(n)}
@@ -202,18 +198,12 @@ def test_lss_path_graph_beyond_label_prop_budget(spark):
 def test_lss_matches_label_propagation_on_random_graph(spark):
     import random
 
-    from social_media_data_pipeline_recession_political_sentiment_spark.operators import dedup as dd
-
     rng = random.Random(42)
     n = 80
     edges = [
         (rng.randrange(n), rng.randrange(n)) for _ in range(60)
     ]  # sparse: multiple components, self-loops, dup edges
-    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    lp = {r.doc_id: r.component for r in dd._label_propagate(docs, pairs).collect()}
-    lss = _lss_labels(spark, n, edges)
-    assert lss == lp
+    assert _lss_labels(spark, n, edges) == union_find_components(range(n), edges)
 
 
 def test_lss_isolated_nodes_and_clique(spark):
@@ -224,16 +214,83 @@ def test_lss_isolated_nodes_and_clique(spark):
 
 
 def test_lss_agrees_with_label_prop_on_real_pairs(spark):
-    # the registered query at smoke SF must equal ext_dedup_components
-    a = {
-        (r.doc_id, r.component)
-        for r in queries()["ext_dedup_components_lss"](spark, SF_SMOKE).collect()
-    }
-    b = {
-        (r.doc_id, r.component)
-        for r in queries()["ext_dedup_components"](spark, SF_SMOKE).collect()
-    }
-    assert a == b
+    # both registered component queries at smoke SF must equal
+    # union-find over the collected exact-Jaccard pair graph
+    q = queries()
+    ids = [
+        r.doc_id
+        for r in spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+        .select("doc_id")
+        .collect()
+    ]
+    pairs = [
+        (r.doc_a, r.doc_b)
+        for r in q["ext_dedup_ngram_jaccard"](spark, SF_SMOKE).collect()
+    ]
+    assert pairs  # the smoke corpus plants near-duplicates
+    expected = union_find_components(ids, pairs)
+    for name in ("ext_dedup_components", "ext_dedup_components_lss"):
+        got = {r.doc_id: r.component for r in q[name](spark, SF_SMOKE).collect()}
+        assert got == expected, name
+
+
+def _chain_docs(n_docs, first_id=100):
+    """A near-duplicate CHAIN: doc k is an 11-token window of one
+    global token stream starting at token 8k, so consecutive docs
+    share exactly one word trigram (tokens 8k+8..8k+10) and no other
+    pair shares any. Each doc has 9 trigrams, so consecutive Jaccard
+    is 1/17 >= JACCARD_THRESHOLD and every doc passes the pipeline's
+    E2E_MIN_TOKENS gate; the pair graph is a path of diameter n-1."""
+    rows = []
+    for k in range(n_docs):
+        text = " ".join(f"t{j:04d}" for j in range(8 * k, 8 * k + 11))
+        rows.append((first_id + k, text, "en", "s", len(text)))
+    return rows
+
+
+def test_components_and_pipeline_converge_on_long_near_dup_chain(spark):
+    from social_media_data_pipeline_recession_political_sentiment_spark.operators.dedup import (
+        E2E_MIN_TOKENS,
+        JACCARD_THRESHOLD,
+    )
+
+    n = 60
+    assert 1 / 17 >= JACCARD_THRESHOLD and 11 >= E2E_MIN_TOKENS
+    tmp = _docs_view(spark, _chain_docs(n))
+    q = queries()
+    pairs = {(r.doc_a, r.doc_b) for r in q["ext_dedup_ngram_jaccard"](spark, tmp).collect()}
+    assert pairs == {(100 + k, 101 + k) for k in range(n - 1)}  # a 59-hop path
+    comp = {r.doc_id: r.component for r in q["ext_dedup_components"](spark, tmp).collect()}
+    assert comp == {100 + k: 100 for k in range(n)}
+    kept = [
+        (r.keep_id, r.component, r.cluster_size)
+        for r in q["ext_dedup_pipeline"](spark, tmp).collect()
+    ]
+    # equal n_chars everywhere: the doc_id tie-break keeps the minimum
+    assert kept == [(100, 100, n)]
+
+
+def test_shingle_intersections_skip_weights_when_pins_hit(spark, monkeypatch):
+    # the idf weights frame is a compute_once feeding only the two pin
+    # builds: pass 1 materializes it once for both, pass 2 (both pins
+    # warm) must plan no weights frame at all
+    from social_media_data_pipeline_recession_political_sentiment_spark.operators import dedup as dd
+
+    calls = []
+    real = dd.compute_once
+
+    def counting(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(dd, "compute_once", counting)
+    tmp = _docs_view(spark, _chain_docs(5))
+    dd._shingle_pair_intersections(spark, tmp)
+    assert len(calls) == 1  # cold: both pins build, one weights frame
+    calls.clear()
+    inter, sizes = dd._shingle_pair_intersections(spark, tmp)
+    assert calls == []  # warm: both pins hit
+    assert inter.count() == 4 and sizes.count() == 5
 
 
 def test_incremental_dedup_flags_match_base_membership(spark):

@@ -349,60 +349,49 @@ def test_pack_sequences_multi_shard_single_language(spark):
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_lss_equals_label_propagation_property(spark, edges):
-    """Star contraction and label propagation must agree on arbitrary
-    small graphs (self-loops, duplicate edges, isolated nodes)."""
+    """Star contraction must agree with the union-find reference on
+    arbitrary small graphs (self-loops, duplicate edges, isolated
+    nodes)."""
     from social_media_data_pipeline_recession_political_sentiment_spark.operators import dedup as dd
+    from tests.conftest import union_find_components
 
     n = 26
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long") if edges else (
         spark.createDataFrame([], "doc_a long, doc_b long")
     )
-    lp = {r.doc_id: r.component for r in dd._label_propagate(docs, pairs).collect()}
     lss = {r.doc_id: r.component for r in dd._large_small_star(docs, pairs).collect()}
-    assert lss == lp
+    assert lss == union_find_components(range(n), edges)
 
 
 def test_path_graph_at_label_prop_budget_boundary(spark, monkeypatch):
-    """Adversarial diameter: on a path graph label propagation needs
-    ~diameter rounds, so just past the round budget it must fail LOUD
-    (RuntimeError — never silently wrong labels), while large-star/
-    small-star converges on the same graph within a budget of the
-    O(log² n) order. The budget is monkeypatched small so the
-    boundary is exercised without a 50-round fixture."""
+    """Round-budget boundary: a 12-node path needs exactly 5 star-
+    contraction rounds (4 to collapse it, 1 to observe the fixed
+    point). One round short of that it must fail LOUD (RuntimeError —
+    never silently wrong labels); at exactly that budget it must
+    converge to the union-find labels. The budget is monkeypatched so
+    the boundary is exercised without a 64-round fixture."""
     import pytest
 
     from social_media_data_pipeline_recession_political_sentiment_spark.operators import dedup as dd
+    from tests.conftest import union_find_components
 
-    budget = 6
-    monkeypatch.setattr(dd, "LABEL_PROP_MAX_ROUNDS", budget)
-    n = 12  # path diameter 11 > budget; convergence also needs a
-    # fixpoint-observation round, so budget 6 is well past exhausted
+    n = 12
+    edges = [(i, i + 1) for i in range(n - 1)]
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dd._label_propagate(docs, pairs).collect()
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
 
-    # the same graph, a same-order budget: star contraction converges
-    monkeypatch.setattr(dd, "LSS_MAX_ROUNDS", 12)  # ≈ log2(12)² ≈ 13
+    monkeypatch.setattr(dd, "LSS_MAX_ROUNDS", 4)
+    with pytest.raises(RuntimeError, match="did not reach an edge fixed point"):
+        dd._large_small_star(docs, pairs).collect()
+
+    monkeypatch.setattr(dd, "LSS_MAX_ROUNDS", 5)
     lss = {
         r.doc_id: r.component
         for r in dd._large_small_star(docs, pairs).collect()
     }
+    assert lss == union_find_components(range(n), edges)
     assert lss == {i: 0 for i in range(n)}
-
-    # boundary sanity: a graph whose diameter fits the budget converges
-    short = spark.createDataFrame(
-        [(i, i + 1) for i in range(3)], "doc_a long, doc_b long"
-    )
-    short_docs = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
-    lp = {
-        r.doc_id: r.component
-        for r in dd._label_propagate(short_docs, short).collect()
-    }
-    assert lp == {i: 0 for i in range(4)}
 
 
 def test_passage_dedup_matches_sequential_reference(spark):

@@ -6,9 +6,10 @@ from __future__ import annotations
 import math
 import os
 import tempfile
+from collections import Counter
 
 from social_media_data_pipeline_recession_political_sentiment_spark.registry import queries
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, union_find_components
 
 
 def _emb_dir(spark, rows):
@@ -1054,27 +1055,9 @@ def test_hamming_components_keepers_vs_pairs(spark):
     ]
     rows = queries()["ext_sim_hamming_components"](spark, SF_SMOKE).collect()
     ids = [r.vec_id for r in rows]
-    parent = {v: v for v in ids}
-
-    def find(v):
-        while parent[v] != v:
-            parent[v] = parent[parent[v]]
-            v = parent[v]
-        return v
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comp = {v: find(v) for v in ids}
-    # min-id labeling: find() roots at the smallest id only if unions
-    # always attach larger to smaller (they do above), but path order
-    # can leave a non-min root — normalize by true min per group
-    groups: dict = {}
-    for v, c in comp.items():
-        groups.setdefault(c, []).append(v)
-    lbl = {v: min(g) for c, g in groups.items() for v in g}
-    size = {v: len(groups[comp[v]]) for v in ids}
+    lbl = union_find_components(ids, pairs)
+    sizes = Counter(lbl.values())
+    size = {v: sizes[lbl[v]] for v in ids}
     for r in rows:
         assert r.component == lbl[r.vec_id]
         assert r.cluster_size == size[r.vec_id]

@@ -6,8 +6,8 @@ Usage:
 Writes <outdir>/<query>_<suffix>.txt for each query (default: the
 r13 optimization target set). Plans are built at $SPARK_GRAFT_SF_DIR
 (default sf0.1) on local[$SPARK_GRAFT_CPUS]. Building a plan can run
-jobs for operators with driver-coordinated loops (LSS, label-prop,
-IVF training) — that is inherent to those plans, not a bug here.
+jobs for operators with driver-coordinated loops (large-star/
+small-star components, IVF training) — that is inherent to those plans, not a bug here.
 """
 
 from __future__ import annotations

@@ -245,7 +245,7 @@ AUDIT = {
         "per-round: one src-keyed join of narrow (id, long) scores "
         "against the localCheckpointed edge+degree table + one "
         "dst-keyed partial/final HashAggregate",
-        "the label-propagation motion pattern with a FIXED round "
+        "a neighbor-aggregation round with a FIXED round "
         "count; scores are 16 bytes/row, so each round moves the id "
         "space, never documents",
     ),
@@ -283,7 +283,7 @@ AUDIT = {
         "the session-pinned pair graph (InMemoryTableScan) semi-joined "
         "against the pinned MinHash candidate set and the gated doc "
         "ids (three broadcast-sized LeftSemi joins), feeding the "
-        "label-prop rounds behind the checkpoint boundary — NO shingle "
+        "star-contraction rounds behind the checkpoint boundary — NO shingle "
         "join anywhere in this plan",
         "banding and exact-Jaccard verify are pairwise functions, so "
         "candidates(gated) == candidates(all) with gated endpoints and "
@@ -295,13 +295,13 @@ AUDIT = {
     ),
     "ext_dedup_pipeline": (
         "scan-local token gate -> the session-pinned pair graph "
-        "restricted to gated docs by two LeftSemi joins -> label-prop "
-        "rounds -> one Window exchange for the canonical pick",
+        "restricted to gated docs by two LeftSemi joins -> star-"
+        "contraction rounds -> one Window exchange for the canonical pick",
         "pairs(gated corpus) == pairs(full corpus) with both endpoints "
         "gated (Jaccard is pairwise), so the pipeline reuses the "
         "session pin instead of re-mining — the r10 3x bench "
-        "regression closed at the source; survivors-only label-prop "
-        "and a single pick exchange remain",
+        "regression closed at the source; survivors-only star "
+        "contraction and a single pick exchange remain",
     ),
     "ext_retrieval_eval": (
         "four rung sub-plans (each ending in its own top-k) hit-joined "
